@@ -46,11 +46,6 @@ PARSED_SCHEMA = T.StructType(
 )
 
 
-def _nullify_empty(c: Column) -> Column:
-    # regexp_extract returns '' on no-match (Spark & DuckDB agree).
-    return F.when(c == "", F.lit(None).cast("string")).otherwise(c)
-
-
 def _sql_str(s: str) -> str:
     """Escape a Python string into a Spark SQL single-quoted literal that
     round-trips to the same runtime string (backslashes doubled for the

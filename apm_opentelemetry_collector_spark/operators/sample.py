@@ -25,13 +25,6 @@ def sample_conversations_nibble(df: DataFrame, keep_nibbles: int = 4) -> DataFra
     return df.filter(first.isin(*allowed) if allowed else F.lit(False))
 
 
-def sample_conversations(df: DataFrame, rate: float) -> DataFrame:
-    """Fine-grained consistent sampling: md5 16-bit prefix < rate * 65536."""
-    threshold = int(rate * 65536)
-    prefix16 = F.conv(F.substring(F.md5(F.col("conv_id").cast("binary")), 1, 4), 16, 10).cast("bigint")
-    return df.filter(prefix16 < threshold)
-
-
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],

@@ -449,10 +449,6 @@ PQ_ITERS = 2    # Lloyd rounds per codebook (lowest-id seeding)
 IVFPQ_NPROBE = 2
 
 
-def _pq_acc0():
-    return F.struct(F.lit(float("inf")).alias("d2"), F.lit(-1).alias("cluster"))
-
-
 # --- SQL-expr twins of the PQ fold builders (r7) ----------------------------
 # The encode/ADC folds nest dot-product lambdas inside argmin lambdas; as
 # Column objects each invocation costs thousands of py4j round trips of

@@ -44,6 +44,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # operators build SQL-expression strings whose literals escape
+        # backslashes and quotes for the parser's escape pass (parse.py
+        # _sql_str); with escaped literals on, those strings change meaning
+        .config("spark.sql.parser.escapedStringLiterals", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash joins when the build side
@@ -143,18 +147,3 @@ def read_input_table(spark: SparkSession, path: str):
         _PARQUET_SCHEMAS[path] = df.schema
         return df
     return spark.read.schema(sch).parquet(path)
-
-
-def assert_no_rowwise_python(df) -> None:
-    """North-star audit: no per-row Python on the hot path.
-
-    Raises if the physical plan contains BatchEvalPython (row-at-a-time
-    Python UDF). ArrowEvalPython (pandas UDF) is allowed — that is the
-    designated vectorized slow path for the parse stage.
-    """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "BatchEvalPython" in plan:
-        raise AssertionError(
-            "physical plan contains row-at-a-time Python UDF (BatchEvalPython):\n"
-            + plan
-        )

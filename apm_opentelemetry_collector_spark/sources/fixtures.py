@@ -9,11 +9,19 @@ attributes/resource/k8s processors' lookup metadata
 The constants here are the single source of truth: sources render them as
 Spark DataFrames, functions/sqlgen.py renders the SAME constants as SQL
 VALUES clauses for the DuckDB oracle, so engine and oracle can never skew.
+
+Every config table reaches Spark through `local_relation`: a JVM
+LocalRelation (LocalTableScan in the physical plan). createDataFrame(list)
+would make each table a Python RDD, and every query broadcasting it would
+run a Python-worker stage to unpickle 6-256 rows.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # (pipeline_id, role_pattern, tool_pattern, sink); '*' matches anything,
 # otherwise exact match. NULL role/tool matches only '*' (SQL equality
@@ -57,12 +65,37 @@ SERVICE_DIM: list[tuple[str, str, str, str]] = [
 SERVICE_DIM_SCHEMA = "role string, tool string, service_name string, resource_type string"
 
 
-def routes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROUTES, ROUTES_SCHEMA)
+def local_relation(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side config rows as a JVM local relation (`ddl` schema).
+
+    The rows travel as one Arrow batch and become a LocalRelation, so no
+    query that reads them runs a Python worker. Values arrive verbatim:
+    no SQL text is rendered, so quotes and backslashes in user config
+    need no escaping. Column types and nullability follow `ddl`. Spark
+    keeps Arrow input local only below
+    spark.sql.execution.arrow.localRelationThreshold (48 MB by default),
+    far above any config table.
+    """
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )
+
+
+def routes_df(
+    spark: SparkSession, routes: list[tuple[str, str, str, str]] | None = None
+) -> DataFrame:
+    """The routes table: ROUTES, or `routes` loaded from a YAML config."""
+    return local_relation(spark, ROUTES if routes is None else routes, ROUTES_SCHEMA)
 
 
 def service_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SERVICE_DIM, SERVICE_DIM_SCHEMA)
+    return local_relation(spark, SERVICE_DIM, SERVICE_DIM_SCHEMA)
 
 
 def _values_sql(rows: list[tuple], alias: str, cols: list[str]) -> str:

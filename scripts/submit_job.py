@@ -55,11 +55,12 @@ def main() -> None:
     # under spark-submit a session already exists; standalone runs build one
     spark = SparkSession.builder.appName("transcript-pipeline").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
 
     if args.config:
         svc = load_config(args.config)
         cfg, shards = svc.pipeline, svc.shards
-        routes = spark.createDataFrame(svc.routes, fixtures.ROUTES_SCHEMA)
+        routes = fixtures.routes_df(spark, svc.routes)
     else:
         cfg, shards, routes = PipelineConfig(), None, None
 

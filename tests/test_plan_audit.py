@@ -43,6 +43,35 @@ def test_no_rowwise_python_anywhere(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_flagship_config_tables_are_local_relations(spark):
+    # the routes, service-dim and shard-LUT tables are JVM local
+    # relations: a Python-RDD scan ('Scan ExistingRDD') would run a
+    # Python-worker stage in every query that broadcasts the table
+    from apm_opentelemetry_collector_spark.plans.job import sharding_safe_batches
+    from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
+
+    cfg = PipelineConfig()
+    routed = run_pipeline(spark, derive_transcripts(spark, SF), cfg).routed
+    plan = plan_of(sharding_safe_batches(routed, cfg))
+    assert "ExistingRDD" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert plan.count("LocalTableScan") >= 3, plan
+
+
+def test_yaml_routes_fan_out_is_local_relation(spark):
+    import os
+
+    from apm_opentelemetry_collector_spark.sources.yaml_config import load_config
+
+    svc = load_config(
+        os.path.join(os.path.dirname(__file__), "..", "conf", "pipelines.yaml")
+    )
+    valid, _ = split_valid(derive_transcripts(spark, SF))
+    plan = plan_of(fan_out(valid, fixtures.routes_df(spark, svc.routes)))
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
 def test_config_joins_are_broadcast(spark):
     plan = plan_of(_flagship(spark))
     # shard lookup must be a broadcast HASH join (the equi-join rewrite),

@@ -28,6 +28,20 @@ pipelines:
     sinks: [sink_all]
 """
 
+# quotes and backslashes in user YAML: single-quoted YAML keeps '\'
+# literal and doubles "'" ('o\''brien\\sink' loads as o\'brien\\sink)
+ODD = r"""
+pipelines:
+  everything:
+    sinks: ['o\''brien\\sink', sink_all]
+  odd/tool:
+    match: {tool: 'it''s\x'}
+    sinks: ['to''ols\x']
+"""
+ODD_SINK = "o\\'brien\\\\sink"
+ODD_TOOL = "it's\\x"
+ODD_TOOL_SINK = "to'ols\\x"
+
 
 def test_full_config_round_trip():
     sc = parse_config(FULL)
@@ -86,7 +100,60 @@ sharding:
     from apm_opentelemetry_collector_spark.sources import fixtures
 
     tr = synth_transcripts(spark, n_rows=500, n_convs=20)
-    routes_df = spark.createDataFrame(sc.routes, fixtures.ROUTES_SCHEMA)
-    res = run_pipeline(spark, tr, sc.pipeline, routes=routes_df, shards=sc.shards)
+    res = run_pipeline(
+        spark, tr, sc.pipeline, routes=fixtures.routes_df(spark, sc.routes),
+        shards=sc.shards,
+    )
     shards_seen = {r["shard_id"] for r in res.routed.select("shard_id").distinct().collect()}
     assert shards_seen <= {"lo", "hi"} and shards_seen
+
+
+def test_fan_out_matches_yaml_strings_verbatim(spark):
+    # the routes table must carry pattern and sink strings unchanged: a
+    # turn whose tool IS the odd pattern matches it, and every routed
+    # sink is the YAML string itself
+    from apm_opentelemetry_collector_spark.operators.route import fan_out
+    from apm_opentelemetry_collector_spark.sources import fixtures
+
+    routes = fixtures.routes_df(spark, parse_config(ODD).routes)
+    turns = fixtures.local_relation(
+        spark,
+        [("c1", "user", ODD_TOOL), ("c2", "user", "search")],
+        "conv_id string, role string, tool string",
+    )
+    got = {(r["conv_id"], r["sink"]) for r in fan_out(turns, routes).collect()}
+    assert got == {
+        ("c1", ODD_SINK), ("c1", "sink_all"), ("c1", ODD_TOOL_SINK),
+        ("c2", ODD_SINK), ("c2", "sink_all"),
+    }
+
+
+def test_submit_job_routes_yaml_strings_verbatim(spark, tmp_path, monkeypatch, capsys):
+    # scripts/submit_job.py end to end (in-process, on the test session):
+    # the routed table's sink partitions read back as the YAML strings
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    script = os.path.join(os.path.dirname(__file__), "..", "scripts", "submit_job.py")
+    spec = importlib.util.spec_from_file_location("submit_job", script)
+    submit_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit_job)
+
+    cfg_path = tmp_path / "odd.yaml"
+    cfg_path.write_text(ODD)
+    out = tmp_path / "out"
+    monkeypatch.setattr(sys, "argv", [
+        "submit_job.py", "--synthetic", "2000", "--output", str(out),
+        "--config", str(cfg_path), "--buckets", "0",
+    ])
+    submit_job.main()
+    assert json.loads(capsys.readouterr().out)["rows"] > 0
+    sinks = {
+        r["sink"]
+        for r in spark.read.parquet(str(out / "routed" / "all"))
+        .select("sink").distinct().collect()
+    }
+    # synthetic turns never carry the odd tool, so its pipeline routes nothing
+    assert sinks == {ODD_SINK, "sink_all"}
