@@ -62,7 +62,7 @@ def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> D
     """
     cfg = cfg or PipelineConfig()
     # one selectExpr instead of two withColumns (r7 construction-cost
-    # pass; run_pipeline builds this per job submission)
+    # pass; routed_stream builds this per job submission)
     pfx = cfg.drop_md5_prefix
     sig = (
         "md5(CAST(concat(conv_id, ':', CAST(turn_idx AS STRING), ':', sink) "

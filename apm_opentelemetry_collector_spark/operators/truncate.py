@@ -33,7 +33,7 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     cfg = cfg or PipelineConfig()
     # One selectExpr instead of four withColumns (r7: each withColumn is a
     # full projection rebuild over py4j; the strings parse in one round
-    # trip — run_pipeline constructs this per job submission). Semantics
+    # trip — routed_stream constructs this per job submission). Semantics
     # unchanged: the rewritten row must FIT the cap — marker + first
     # `keep` bytes (reference re-encodes after truncation and checks the
     # size again, shard_encoder.go:254-266); keep < 0 → even the marker

@@ -15,8 +15,12 @@ Scale design: the unit of resumability is the conv_id bucket — the same
 key the input table is partitioned by (write_partitioned: ts_day ×
 bucket(conv_id)), so each bucket job prunes its scan to its own files and
 buckets never overlap. On a 1000-executor cluster you would raise
-N_BUCKETS to a few thousand so stragglers re-run cheaply; locally 16
-keeps job overhead negligible. `buckets=None` runs the whole input as a
+N_BUCKETS to a few thousand so stragglers re-run cheaply. A bucket has a
+fixed cost: one pipeline construction on the driver (about 0.5 s) and
+three writes, which Spark runs as 10-11 jobs with their AQE stages
+(traced perfbench on a 4-core host: 11 jobs for a single pass, 85 for
+8 buckets plus the bucketed materialization). Locally, 16 buckets thus
+add seconds over one pass. `buckets=None` runs the whole input as a
 single pass (fastest when resume granularity is not needed).
 """
 
@@ -28,13 +32,18 @@ import time
 import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import (
+    OUTCOME_ACCEPTED,
+    OUTCOME_DROPPED,
+    OUTCOME_REFUSED,
+    PipelineConfig,
+)
 from ..operators.aggregate import conv_bucket_col
 from ..operators.pack import assign_batches
-from ..plans.pipeline import run_pipeline
+from ..plans.pipeline import routed_stream
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -78,6 +87,24 @@ def completed_buckets(out_dir: str) -> set[int]:
     return out
 
 
+class ConservationError(RuntimeError):
+    """A bucket's observed counts disagree; its manifest is not written."""
+
+
+OUTCOMES = (OUTCOME_ACCEPTED, OUTCOME_DROPPED, OUTCOME_REFUSED)
+
+
+def _observed(
+    df: DataFrame, name: str, *metrics: F.Column
+) -> tuple[DataFrame, Observation]:
+    """`df` with an Observation of `metrics` attached. Attach it directly
+    above the write, so CollectMetrics runs in the result stage (a task's
+    accumulator update is applied once), and read `obs.get` only after
+    that write has returned: a failed write never fills it."""
+    obs = Observation(name)
+    return df.observe(obs, *metrics), obs
+
+
 def _process(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -89,13 +116,20 @@ def _process(
 ) -> dict:
     """Run the pipeline over one bucket (or all) and write outputs.
 
-    Single materialization discipline: the routed rows (with outcome,
-    shard, batch assignment) are written ONCE, partitioned by sink; every
-    aggregate is then derived from the written files — no stage of the
-    lineage is computed twice.
+    Only the writes run: the routed rows (with outcome, shard, batch
+    assignment) once, partitioned by sink; the metric table, aggregated
+    from the written files; and the rejected rows. The manifest counts
+    are Observations on those writes, computed in the same pass, so no
+    query reads an output back to count it. Observation names carry the
+    bucket, because buckets run concurrently in one session. A sent
+    count that differs from the written total, or outcome counts that do
+    not add up to it, raise ConservationError: no manifest is written and
+    the bucket replays on the next run.
     """
-    res = run_pipeline(spark, transcripts, cfg, routes=routes, shards=shards)
-    routed = sharding_safe_batches(res.routed, cfg)
+    _valid, rejected, routed = routed_stream(
+        spark, transcripts, cfg, routes=routes, shards=shards
+    )
+    routed = sharding_safe_batches(routed, cfg)
     sub = f"bucket={bucket}" if bucket is not None else "all"
 
     routed_dir = os.path.join(out_dir, "routed", sub)
@@ -103,74 +137,79 @@ def _process(
         "conv_bucket", conv_bucket_col(cfg.n_conv_buckets)
     ).drop("parsed", "hash_key")  # wide derived cols stay out of the sink table
     rejected_dir = os.path.join(out_dir, "rejected", sub)
+    metrics_dir = os.path.join(out_dir, "metrics", sub)
 
-    # The routed chain (write → metrics aggregate → totals) and the
-    # rejected chain (write → count) share no lineage, so they run as
-    # two concurrent driver-submitted job chains (guide §2.6: actions
-    # are only sequential because the driver calls them sequentially;
-    # the rejected chain's tasks back-fill executors left idle by the
-    # routed write's stragglers). Job descriptions are thread-local, so
-    # the UI stays labelled correctly.
+    sent, sent_obs = _observed(sink_table, f"sent-{sub}", F.count("*").alias("n"))
+    sent.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
 
-    def _routed_chain() -> list:
-        sink_table.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
-        # aggregates from the written table — ONE pruned scan (group
-        # cols + crc only; parquet column pruning keeps text out)
-        # produces the metric table, the outcome totals, and the lineage
-        # checksum. Explicit schema (known from the DataFrame just
-        # written): an EMPTY bucket writes only _SUCCESS, and schema
-        # inference over zero part files would fail — empty buckets are
-        # legal (sparse inputs, layouts written with fewer buckets than
-        # requested).
-        written = spark.read.schema(sink_table.schema).parquet(routed_dir)
-        sink_counts = written.groupBy(
-            "sink", "conv_bucket", "role", "tool", "outcome"
-        ).agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.crc32(F.concat_ws("|", "conv_id", "turn_idx", "sink", "outcome"))
-            ).alias("crc"),
-        )
-        # Metrics are written by Spark directly — never collected to the
-        # driver: cardinality is sinks × n_conv_buckets × roles × tools
-        # × outcomes, and n_conv_buckets is "a few thousand" on a real
-        # cluster.
-        metrics_dir = os.path.join(out_dir, "metrics", sub)
-        sink_counts.write.mode("overwrite").parquet(metrics_dir)
+    # The metric table is aggregated from the WRITTEN table — one pruned
+    # scan (group cols + crc only; parquet column pruning keeps text out).
+    # Explicit schema (known from the DataFrame just written): an EMPTY
+    # bucket writes only _SUCCESS, and schema inference over zero part
+    # files would fail — empty buckets are legal (sparse inputs, layouts
+    # written with fewer buckets than requested).
+    written = spark.read.schema(sink_table.schema).parquet(routed_dir)
+    sink_counts = written.groupBy(
+        "sink", "conv_bucket", "role", "tool", "outcome"
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum(
+            F.crc32(F.concat_ws("|", "conv_id", "turn_idx", "sink", "outcome"))
+        ).alias("crc"),
+    )
+    # Metrics are written by Spark directly — never collected to the
+    # driver: cardinality is sinks × n_conv_buckets × roles × tools ×
+    # outcomes, and n_conv_buckets is "a few thousand" on a real cluster.
+    # The manifest totals (per outcome, and overall) are observed on that
+    # write.
+    per_outcome = [
+        F.sum(F.when(F.col("outcome") == o, F.col(c))).alias(f"{c}_{o}")
+        for o in OUTCOMES
+        for c in ("n", "crc")
+    ]
+    metrics, totals_obs = _observed(
+        sink_counts, f"totals-{sub}", F.sum("n").alias("n"), *per_outcome
+    )
+    rejected_out, rejected_obs = _observed(
+        rejected, f"rejected-{sub}", F.count("*").alias("n")
+    )
 
-        # The manifest totals come from a second aggregate over the
-        # WRITTEN metrics table (tiny scan), collapsed to one row per
-        # outcome — the only .collect() in the runner, bounded by
-        # #outcomes (≤4).
-        return (
-            spark.read.schema(sink_counts.schema).parquet(metrics_dir)
-            .groupBy("outcome")
-            .agg(F.sum("n").alias("n"), F.sum("crc").alias("crc"))
-            .collect()
-        )
-
-    def _rejected_chain() -> int:
-        res.rejected.write.mode("overwrite").parquet(rejected_dir)
-        return (
-            spark.read.schema(res.rejected.schema).parquet(rejected_dir).count()
-        )
-
+    # The rejected write shares no lineage with the routed outputs. It
+    # runs from a second driver thread beside the metrics write, whose
+    # two small jobs leave cores idle, rather than beside the routed
+    # write, which is the critical path and keeps every core (guide §2.6:
+    # actions are only sequential because the driver calls them
+    # sequentially).
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        totals_f = pool.submit(_routed_chain)
-        rejected_f = pool.submit(_rejected_chain)
-        totals = totals_f.result()
-        n_rejected = rejected_f.result()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        rejected_f = pool.submit(
+            rejected_out.write.mode("overwrite").parquet, rejected_dir
+        )
+        metrics.write.mode("overwrite").parquet(metrics_dir)
+        rejected_f.result()
+    n_sent, totals = sent_obs.get["n"], totals_obs.get
+    n_rejected = rejected_obs.get["n"]
 
-    by_outcome = {r["outcome"]: int(r["n"]) for r in totals}
-    checksum = sum(int(r["crc"] or 0) for r in totals)
+    # NULL sums (no metric rows of that outcome, or an empty bucket) are 0
+    by_outcome = {o: int(totals[f"n_{o}"]) for o in OUTCOMES if totals[f"n_{o}"]}
+    routed_rows = int(totals["n"] or 0)
+    if sum(by_outcome.values()) != routed_rows:
+        raise ConservationError(
+            f"{sub}: outcome counts {by_outcome} do not add up to the "
+            f"{routed_rows} routed rows written"
+        )
+    if n_sent != routed_rows:
+        raise ConservationError(
+            f"{sub}: {n_sent} routed rows sent to the write, {routed_rows} "
+            "counted in the written files"
+        )
     return {
         "bucket": bucket,
-        "routed_rows": int(sum(by_outcome.values())),
+        "routed_rows": routed_rows,
         "by_outcome": by_outcome,
         "rejected_rows": int(n_rejected),
-        "checksum": int(checksum),
+        "checksum": sum(int(totals[f"crc_{o}"] or 0) for o in OUTCOMES),
         "completed_at": time.time(),
     }
 

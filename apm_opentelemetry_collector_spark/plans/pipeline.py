@@ -9,10 +9,13 @@ assignment (omnishard md5 ranges) → record packing → metric aggregates
 (obsreport views).
 
 Everything is lazy; `run_pipeline` returns named DataFrames so callers
-(driver entry, tests, bench) choose what to materialize. The whole plan
-shuffles the fact table at most twice: once on conv_id (windows: protocol
-check, forward fill, packing order all reuse it) and once for the final
-salted aggregate; every config join is broadcast.
+(driver entry, tests, bench) choose what to materialize. `routed_stream`
+builds only the routed stream, for callers that need none of the
+aggregates (the job runner, the SQL views). The routed stream shuffles
+the fact table once, on conv_id (protocol check and forward fill share
+the exchange). Record packing shuffles the accepted rows again, on
+(sink, shard_id), and the salted aggregate adds its own exchanges over
+partial counts. Every config join is broadcast.
 """
 
 from __future__ import annotations
@@ -50,7 +53,7 @@ class PipelineResult:
     flushed: DataFrame          # A1/A8
 
 
-def run_pipeline(
+def routed_stream(
     spark: SparkSession,
     transcripts: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -58,7 +61,9 @@ def run_pipeline(
     service_dim: DataFrame | None = None,
     shards: list[dict] | None = None,
     use_pandas_udf_parse: bool = False,
-) -> PipelineResult:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(valid, rejected, routed): validate → fill → parse → truncate →
+    enrich → fan-out → outcome → shard, without the aggregates."""
     cfg = cfg or PipelineConfig()
     routes = routes if routes is not None else fixtures.routes_df(spark)
     service_dim = (
@@ -89,6 +94,22 @@ def run_pipeline(
     # shard assignment (J1-J3) on the routed stream, like the omnishard
     # exporter sharding each pipeline's output
     routed = sharding.assign_shard(routed, shard_list, "conv_id", "left")
+    return valid, rejected, routed
+
+
+def run_pipeline(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    cfg: PipelineConfig | None = None,
+    routes: DataFrame | None = None,
+    service_dim: DataFrame | None = None,
+    shards: list[dict] | None = None,
+    use_pandas_udf_parse: bool = False,
+) -> PipelineResult:
+    cfg = cfg or PipelineConfig()
+    valid, rejected, routed = routed_stream(
+        spark, transcripts, cfg, routes, service_dim, shards, use_pandas_udf_parse
+    )
 
     # record packing (W3) on accepted rows only — dropped sends never
     # reach a record (hooks.go:128-160 orders drop before flush)

@@ -27,7 +27,7 @@ def register_views(
     include_pipeline — `routed` (parse→enrich→route→outcome output).
     Returns the view names registered."""
     from ..config import PipelineConfig
-    from ..plans.pipeline import run_pipeline
+    from ..plans.pipeline import routed_stream
     from .transcripts import derive_transcripts
 
     from ..operators.tdigest import register_digest_sql
@@ -42,9 +42,9 @@ def register_views(
     tr.createOrReplaceTempView("transcripts")
     names.append("transcripts")
     if include_pipeline:
-        res = run_pipeline(spark, tr, PipelineConfig())
-        res.routed.createOrReplaceTempView("routed")
-        res.rejected.createOrReplaceTempView("rejected")
+        _valid, rejected, routed = routed_stream(spark, tr, PipelineConfig())
+        routed.createOrReplaceTempView("routed")
+        rejected.createOrReplaceTempView("rejected")
         names += ["routed", "rejected"]
     # digest aggregates: approximate quantiles composable from pure SQL
     names += register_digest_sql(spark)

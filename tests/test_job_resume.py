@@ -4,10 +4,15 @@ invariants, encoder.go:226-263)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import warnings
 
 import pytest
+from pyspark.sql import functions as F
 
 from apm_opentelemetry_collector_spark.plans.job import (
+    ConservationError,
     completed_buckets,
     read_all_manifests,
     run_job,
@@ -129,3 +134,126 @@ def test_bucket_count_undershoot_warns(spark, tmp_path):
         sum(m["checksum"] for m in r.manifests),
     )
     assert key(res) == key(ok)
+
+
+MANIFEST_KEYS = ("routed_rows", "by_outcome", "rejected_rows", "checksum")
+
+
+def _from_files(spark, out_dir: str, sub: str) -> dict:
+    """The manifest fields recomputed from what one bucket wrote: routed
+    rows and checksum from routed/, the same per outcome from metrics/,
+    and the rejected count from rejected/. A directory without part
+    files (an empty bucket) counts as empty."""
+
+    def read(kind):
+        d = os.path.join(out_dir, kind, sub)
+        parts = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+        return spark.read.parquet(d) if parts else None
+
+    routed, metrics, rejected = read("routed"), read("metrics"), read("rejected")
+    crc = F.crc32(F.concat_ws("|", "conv_id", "turn_idx", "sink", "outcome"))
+    by_routed = {} if routed is None else {
+        r["outcome"]: (r["n"], r["crc"])
+        for r in routed.groupBy("outcome")
+        .agg(F.count("*").alias("n"), F.sum(crc).alias("crc"))
+        .collect()
+    }
+    by_metrics = {} if metrics is None else {
+        r["outcome"]: (r["n"], r["crc"])
+        for r in metrics.groupBy("outcome")
+        .agg(F.sum("n").alias("n"), F.sum("crc").alias("crc"))
+        .collect()
+    }
+    assert by_routed == by_metrics, (sub, by_routed, by_metrics)
+    return {
+        "routed_rows": sum(n for n, _ in by_routed.values()),
+        "by_outcome": {o: n for o, (n, _) in by_routed.items()},
+        "rejected_rows": 0 if rejected is None else rejected.count(),
+        "checksum": sum(c for _, c in by_routed.values()),
+    }
+
+
+def _assert_reconciles(spark, out_dir: str) -> None:
+    for m in read_all_manifests(out_dir):
+        sub = "all" if m["bucket"] is None else f"bucket={m['bucket']}"
+        got = _from_files(spark, out_dir, sub)
+        assert {k: m[k] for k in MANIFEST_KEYS} == got, sub
+
+
+def test_manifests_reconcile_with_written_files(spark, tmp_path):
+    """Every manifest equals what its bucket wrote: routed, metrics and
+    rejected files re-read. Covers a single pass, and a bucketed run
+    whose last bucket is empty (a layout written with 2 of 3 buckets)."""
+    from apm_opentelemetry_collector_spark.sources.transcripts import (
+        write_partitioned,
+    )
+
+    tr = synth_transcripts(spark, n_rows=2_000, n_convs=40)
+    single = str(tmp_path / "single")
+    run_job(spark, tr, single, n_buckets=None)
+    _assert_reconciles(spark, single)
+
+    layout = str(tmp_path / "layout2")
+    write_partitioned(tr, layout, n_buckets=2)
+    bucketed = str(tmp_path / "bucketed")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        run_job(spark, spark.read.parquet(layout), bucketed, n_buckets=3)
+    ms = read_all_manifests(bucketed)
+    assert [m["bucket"] for m in ms] == [0, 1, 2]
+    assert {k: ms[2][k] for k in MANIFEST_KEYS} == {
+        "routed_rows": 0, "by_outcome": {}, "rejected_rows": 0, "checksum": 0,
+    }
+    assert ms[0]["rejected_rows"] + ms[1]["rejected_rows"] > 0
+    _assert_reconciles(spark, bucketed)
+    # the buckets add up to the single pass
+    one = read_all_manifests(single)[0]
+    for key in ("routed_rows", "rejected_rows", "checksum"):
+        assert sum(m[key] for m in ms) == one[key], key
+
+
+def test_single_pass_runs_no_driver_actions(spark, tmp_path, monkeypatch):
+    """The job runner takes its counts from Observations on its writes:
+    with DataFrame.collect and .count raising, a single pass still
+    completes and writes the same manifest."""
+    tr = synth_transcripts(spark, n_rows=2_000, n_convs=40)
+    run_job(spark, tr, str(tmp_path / "plain"), n_buckets=None)
+    want = read_all_manifests(str(tmp_path / "plain"))[0]
+
+    def refuse(self, *a, **kw):
+        raise AssertionError("driver action in the job runner")
+
+    monkeypatch.setattr(type(tr), "collect", refuse)
+    monkeypatch.setattr(type(tr), "count", refuse)
+    run_job(spark, tr, str(tmp_path / "observed"), n_buckets=None)
+    monkeypatch.undo()
+    got = read_all_manifests(str(tmp_path / "observed"))[0]
+    assert {k: got[k] for k in MANIFEST_KEYS} == {k: want[k] for k in MANIFEST_KEYS}
+
+
+def test_lost_routed_file_refuses_manifest_and_replays(spark, tmp_path, monkeypatch):
+    """Sent-versus-written conservation: a routed part file lost after
+    the write (the rows the write was sent no longer match the rows the
+    metrics count from the files) fails the bucket before its manifest
+    is written, and a re-run replays that bucket alone."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tr = synth_transcripts(spark, n_rows=2_000, n_convs=40)
+    out_dir = str(tmp_path / "job")
+    lossy = os.path.join(out_dir, "routed", "bucket=1")
+    write = DataFrameWriter.parquet
+
+    def lose_one_file(self, path, *a, **kw):
+        write(self, path, *a, **kw)
+        if path == lossy:
+            os.remove(sorted(glob.glob(os.path.join(path, "sink=*", "*.parquet")))[0])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lose_one_file)
+    with pytest.raises(ConservationError, match="bucket=1"):
+        run_job(spark, tr, out_dir, n_buckets=2)
+    monkeypatch.undo()
+    assert completed_buckets(out_dir) == {0}
+
+    res = run_job(spark, tr, out_dir, n_buckets=2)
+    assert res.buckets_run == [1] and res.buckets_skipped == [0]
+    _assert_reconciles(spark, out_dir)

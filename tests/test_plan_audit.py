@@ -179,8 +179,9 @@ def test_job_bucket_slice_prunes_partitioned_layout(spark, tmp_path):
 
 def test_job_runner_bounded_collects_only():
     # the runner must never collect config-unbounded data to the driver;
-    # the TWO allowed .collect()s are the ≤#outcomes manifest totals and
-    # the ≤n_buckets distinct partition values in validate_bucket_layout.
+    # the ONE allowed .collect() is the ≤n_buckets distinct partition
+    # values in validate_bucket_layout (once per run, not per bucket —
+    # manifest counts are Observations on the writes).
     import inspect
 
     from apm_opentelemetry_collector_spark.plans import job
@@ -189,11 +190,40 @@ def test_job_runner_bounded_collects_only():
     code = "\n".join(
         l for l in src.splitlines() if not l.strip().startswith("#")
     )
-    assert code.count(".collect()") == 2, "new driver-side collect in plans/job.py"
-    first, second = code.split(".collect()")[:2]
-    bounded_markers = ('groupBy("outcome")', 'select("conv_bucket").distinct()')
-    assert any(m in first[-300:] for m in bounded_markers)
-    assert any(m in second[-300:] for m in bounded_markers)
+    assert code.count(".collect()") == 1, "new driver-side collect in plans/job.py"
+    assert 'select("conv_bucket").distinct()' in code.split(".collect()")[0][-300:]
+    assert ".count()" not in code, "read-back count in plans/job.py"
+
+
+def test_job_observations_sit_in_the_result_stage(spark, tmp_path, monkeypatch):
+    # each manifest count is an Observation directly above its write: no
+    # Exchange above CollectMetrics, so it runs in the write's result
+    # stage (a task's accumulator update is applied once), and its name
+    # carries the bucket, because buckets run concurrently
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from apm_opentelemetry_collector_spark.plans.job import run_job
+    from apm_opentelemetry_collector_spark.sources.transcripts import (
+        synth_transcripts,
+    )
+
+    plans = {}
+    write = DataFrameWriter.parquet
+
+    def recording(self, path, *a, **kw):
+        plans[path.rsplit("/", 2)[-2]] = plan_of(self._df)
+        return write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    tr = synth_transcripts(spark, 1000, 20)
+    run_job(spark, tr, str(tmp_path / "job"), n_buckets=1)
+    names = {"routed": "sent", "metrics": "totals", "rejected": "rejected"}
+    assert plans.keys() == names.keys()
+    for kind, name in names.items():
+        top = plans[kind].split("CollectMetrics ")
+        assert len(top) == 2, (kind, plans[kind])
+        assert "Exchange" not in top[0], (kind, plans[kind])
+        assert top[1].startswith(f"{name}-bucket=0,"), (kind, plans[kind])
 
 
 def test_asof_join_single_exchange(spark):
